@@ -155,6 +155,47 @@ def test_mih_kernel_and_rowjoin_paths_identical(spark):
     assert rowjoin == kernel
 
 
+def test_mih_kernel_split_blocks_match_rowjoin(spark):
+    """The rendezvous kernel's oversized-block split: with _MIH_KERNEL_CHUNK
+    shrunk below one block's size, block pairs split along A (a big block
+    against small ones) and along B (a big block against itself, one A
+    row per sub-grid still above the chunk) into many chunks each. The
+    pair set must equal the row-join branch and brute force."""
+    from unittest import mock
+
+    from visiblev8_crawler_spark.plans import imageops as io
+
+    chunk, big = 48, 80  # one 80-row block per band > the 48-candidate chunk
+    rng = np.random.default_rng(7)
+    base = int(rng.integers(-(2**63), 2**63 - 1))
+    hashes = [base] * big
+    for _ in range(20):  # near-dups of the cluster: small blocks nearby
+        flips = rng.choice(64, size=int(rng.integers(1, 4)), replace=False)
+        hashes.append(base ^ int(sum(1 << int(b) for b in flips)))
+    hashes += [int(x) for x in rng.integers(-(2**63), 2**63 - 1, size=200)]
+    hashes = [h - (1 << 64) if h >= (1 << 63) else h for h in hashes]
+    ph = spark.createDataFrame(
+        [(g, 0, h) for g, h in enumerate(hashes)], "gid long, item long, phash long"
+    ).persist()
+    tau = io._PHASH_PAIR_TAU
+
+    rowjoin = sorted(tuple(r) for r in io._mih_pairs(ph, tau).collect())
+    with mock.patch.object(io, "_MIH_KERNEL_MIN_OCC", 0), mock.patch.object(
+        io, "_MIH_KERNEL_CHUNK", chunk
+    ):
+        kernel = sorted(tuple(r) for r in io._mih_pairs(ph, tau).collect())
+    ph.unpersist()
+    brute = sorted(
+        (a, 0, b, 0, bin((hashes[a] ^ hashes[b]) & (2**64 - 1)).count("1"))
+        for a in range(len(hashes))
+        for b in range(a + 1, len(hashes))
+        if bin((hashes[a] ^ hashes[b]) & (2**64 - 1)).count("1") <= tau
+    )
+    assert len(brute) >= big * (big - 1) // 2
+    assert rowjoin == brute
+    assert kernel == rowjoin
+
+
 def test_lsh_kernel_chunking_invariant():
     """_bucket_tau_pairs/_bucket_topk_pairs results must not depend on the
     chunk size (the fixture buckets are single-chunk; force multi-chunk)."""

@@ -598,10 +598,14 @@ def _np_popcount64(x: np.ndarray) -> np.ndarray:
     return ((u * 0x0101010101010101) >> 56).astype(np.int64)
 
 
-_MIH_KERNEL_CHUNK = 2_000_000  # bounds the flattened per-slice candidate arrays
+# bounds the flattened per-slice candidate arrays; read on the driver and
+# passed to the kernel, so a test can shrink it for the executor side too
+_MIH_KERNEL_CHUNK = 2_000_000
 
 
-def _mih_rendezvous_kernel(batches: "Iterator[pa.RecordBatch]", tau: int):
+def _mih_rendezvous_kernel(
+    batches: "Iterator[pa.RecordBatch]", tau: int, chunk: int
+):
     """Exact Hamming scoring of ONE TASK PARTITION of rendezvous entries
     (hash-partitioned by (band, z): every group is complete within the
     partition, and one partition holds many groups — a partition-level
@@ -619,7 +623,8 @@ def _mih_rendezvous_kernel(batches: "Iterator[pa.RecordBatch]", tau: int):
     over a flattened candidate index (ragged cross-products of all the
     partition's allowed block pairs, a 1-D XOR+popcount — no per-block
     numpy dispatch). Emits cross-gid pairs with popcount <= tau,
-    oriented gid_a < gid_b. Exact integer arithmetic throughout — the
+    oriented gid_a < gid_b. ``chunk`` caps the candidates scored per
+    pass (the pinned buffer size). Exact integer arithmetic throughout — the
     emitted set, after the caller's cross-band distinct(), is identical
     to materializing the radius-2 candidate join and filtering."""
     bs = [b for b in batches if b.num_rows]
@@ -684,21 +689,27 @@ def _mih_rendezvous_kernel(batches: "Iterator[pa.RecordBatch]", tau: int):
     ca, cb = counts[bpa], counts[bpb]
     sa, sb = starts[bpa], starts[bpb]
     c = ca * cb
-    # split oversized block pairs along the A side so every chunk below
-    # is a run of WHOLE pairs bounded by _MIH_KERNEL_CHUNK candidates
-    big = np.flatnonzero(c > _MIH_KERNEL_CHUNK)
+    # split oversized block pairs into sub-grids of at most ``chunk``
+    # candidates — along the A side, and along the B side too when one B
+    # block alone exceeds it — so every chunk below is a run of WHOLE
+    # pairs that fits the pinned buffers. Own-block sub-grids keep their
+    # tri flag: the jj > ii test uses absolute row positions.
+    big = np.flatnonzero(c > chunk)
     if len(big):
-        keep_small = np.ones(len(pa), dtype=bool)
+        keep_small = np.ones(len(c), dtype=bool)
         keep_small[big] = False
         ex_sa, ex_ca, ex_sb, ex_cb, ex_tri = [], [], [], [], []
         for p_ in big:
-            rows = max(1, _MIH_KERNEL_CHUNK // int(cb[p_]))
-            for off in range(0, int(ca[p_]), rows):
-                ex_sa.append(int(sa[p_]) + off)
-                ex_ca.append(min(rows, int(ca[p_]) - off))
-                ex_sb.append(int(sb[p_]))
-                ex_cb.append(int(cb[p_]))
-                ex_tri.append(bool(tri[p_]))
+            na, nb = int(ca[p_]), int(cb[p_])
+            cols = min(nb, chunk)
+            rows = max(1, chunk // cols)
+            for a_off in range(0, na, rows):
+                for b_off in range(0, nb, cols):
+                    ex_sa.append(int(sa[p_]) + a_off)
+                    ex_ca.append(min(rows, na - a_off))
+                    ex_sb.append(int(sb[p_]) + b_off)
+                    ex_cb.append(min(cols, nb - b_off))
+                    ex_tri.append(bool(tri[p_]))
         sa = np.concatenate((sa[keep_small], np.asarray(ex_sa, dtype=np.int64)))
         ca = np.concatenate((ca[keep_small], np.asarray(ex_ca, dtype=np.int64)))
         sb = np.concatenate((sb[keep_small], np.asarray(ex_sb, dtype=np.int64)))
@@ -712,13 +723,13 @@ def _mih_rendezvous_kernel(batches: "Iterator[pa.RecordBatch]", tau: int):
     # fresh ~16 MB buffers, 32 concurrent worker processes) dominated the
     # arithmetic before buffers were pinned (guide §4.2 — heavyweight
     # init once, not per batch)
-    xa = np.empty(_MIH_KERNEL_CHUNK, dtype=np.int64)
-    xb = np.empty(_MIH_KERNEL_CHUNK, dtype=np.int64)
-    tb = np.empty(_MIH_KERNEL_CHUNK, dtype=np.uint64)
+    xa = np.empty(chunk, dtype=np.int64)
+    xb = np.empty(chunk, dtype=np.int64)
+    tb = np.empty(chunk, dtype=np.uint64)
     p0 = 0
     while p0 < npairs:
         # widest run of whole pairs within the chunk budget
-        target = (csum[p0 - 1] if p0 else 0) + _MIH_KERNEL_CHUNK
+        target = (csum[p0 - 1] if p0 else 0) + chunk
         p1 = max(p0 + 1, int(np.searchsorted(csum, target, side="right")))
         cs, cas, cbs = c[p0:p1], ca[p0:p1], cb[p0:p1]
         sas, sbs, tris = sa[p0:p1], sb[p0:p1], tri[p0:p1]
@@ -923,8 +934,9 @@ def _mih_pairs(hashes, tau: int):
     # (one Arrow batch + pandas frame per group) cost ~ms x tens of
     # thousands of near-empty groups; mapInArrow skips the pandas
     # conversion both ways (measured ~2x on the buffered round-trip)
+    chunk = _MIH_KERNEL_CHUNK
     hits = entries.repartition("band", "z").mapInArrow(
-        lambda it: _mih_rendezvous_kernel(it, tau),
+        lambda it: _mih_rendezvous_kernel(it, tau, chunk),
         "gid_a long, item_a long, gid_b long, item_b long, hamming int",
     )
     # multi-band dedupe (the kernel's canonical-z rule already makes hits
