@@ -4,10 +4,12 @@
 Invariants under test:
 - no false negatives, ever (the property that makes the pre-filter exact);
 - bounded false-positive rate near the configured fpp;
-- ``seen_anti_join`` ≡ plain exact ``left_anti`` for overlapping inputs;
 - ``scheduler.add_seeds`` end-to-end: cache hits rejected as 'cached'
   (backend tasks.py:148-156 D1), already-enqueued as 'enqueued', fresh URLs
-  crawled exactly once after resume.
+  crawled exactly once after resume;
+- both sides of add_seeds' size-gated branches: an outgrown stored filter
+  rebuilds exactly once at doubled capacity, and a filter that says "maybe"
+  for every row (all work on the exact join) gives the same dispositions.
 """
 
 import numpy as np
@@ -35,36 +37,13 @@ def test_bloom_numpy_kernel_no_false_negatives():
 def test_bloom_spark_build_probe(spark):
     members = [f"https://h{i % 97}.example/img/img_{i:012d}" for i in range(5000)]
     others = [f"https://h{i % 97}.example/img/img_{i:012d}" for i in range(5000, 10000)]
-    bf = B.build_bloom(_urls_df(spark, members), fpp=0.01)
+    bf = B.build_bloom(_urls_df(spark, members), "canon_url", 5000, 0.01)
 
     got = B.with_bloom_maybe(_urls_df(spark, members), bf).collect()
     assert all(r["maybe_seen"] for r in got), "bloom false negative"
 
     fp = [r["maybe_seen"] for r in B.with_bloom_maybe(_urls_df(spark, others), bf).collect()]
     assert sum(fp) / len(fp) < 0.05, f"fp rate {sum(fp)/len(fp)} too high for fpp=0.01"
-
-
-def test_sharded_bloom_equivalent(spark):
-    """Sharding is purely operational: no false negatives, and the
-    bloom-prefiltered anti-join result is identical to the single-bitmap and
-    plain-exact paths."""
-    members = [f"https://s{i % 31}.example/p/{i}" for i in range(4000)]
-    others = [f"https://s{i % 31}.example/p/{i}" for i in range(4000, 8000)]
-    sharded = B.build_bloom(_urls_df(spark, members), fpp=0.01, shards=4)
-    assert isinstance(sharded, B.ShardedBloom) and len(sharded.shards) == 4
-
-    got = B.with_bloom_maybe(_urls_df(spark, members), sharded).collect()
-    assert all(r["maybe_seen"] for r in got), "sharded bloom false negative"
-    fp = [r["maybe_seen"] for r in B.with_bloom_maybe(_urls_df(spark, others), sharded).collect()]
-    assert sum(fp) / len(fp) < 0.05
-
-    cand = _urls_df(spark, members[:2000] + others[:2000])
-    seen = _urls_df(spark, members)
-    via_shards = {
-        r["canon_url"] for r in B.seen_anti_join(cand, seen, bloom=sharded).collect()
-    }
-    exact = {r["canon_url"] for r in cand.join(seen, "canon_url", "left_anti").collect()}
-    assert via_shards == exact == set(others[:2000])
 
 
 def test_catalog_compaction(spark, tmp_path_factory):
@@ -81,15 +60,6 @@ def test_catalog_compaction(spark, tmp_path_factory):
     assert cat.file_sets("t") == 1
     assert {r["v"] for r in cat.read("t").collect()} == {0, 1, 2}
     assert cat.compact("t") is False  # already compact
-
-
-def test_seen_anti_join_equals_exact(spark):
-    cand = _urls_df(spark, [f"u://c/{i}" for i in range(2000)])
-    seen = _urls_df(spark, [f"u://c/{i}" for i in range(1000, 2500)])
-    got = {r["canon_url"] for r in B.seen_anti_join(cand, seen).collect()}
-    want = {r["canon_url"] for r in cand.join(seen, "canon_url", "left_anti").collect()}
-    assert got == want
-    assert got == {f"u://c/{i}" for i in range(1000)}
 
 
 def test_add_seeds_cross_campaign(spark, world, tmp_path_factory):
@@ -238,3 +208,110 @@ def test_concurrent_add_seeds_serialize(spark, world, tmp_path_factory):
         .count()
     )
     assert dups == 0
+
+
+def _mk_frontier(spark, urls):
+    return spark.createDataFrame(
+        [(i, u, 0) for i, u in enumerate(urls)], "seq long, url string, priority int"
+    )
+
+
+def _short_campaign(spark, world, root):
+    frontier = spark.read.parquet(world["paths"]["frontier"])
+    robots = spark.read.parquet(world["paths"]["robots"])
+    images = spark.read.parquet(world["paths"]["images"])
+    cat = scheduler.run_campaign(
+        spark, root, frontier, robots, images, CrawlConfig(batch_size=150),
+        stop_after_waves=1,
+    )
+    return cat, robots
+
+
+def _ingest_batch(cat, tag):
+    """3 crawled + 3 enqueued + 4 fresh urls + 1 invalid + 1 in-batch dup."""
+    seen = scheduler.url_seen_df(cat).select("canon_url")
+    crawled = [r["canon_url"] for r in seen.orderBy("canon_url").limit(3).collect()]
+    enqueued = [
+        r["canon_url"]
+        for r in scheduler.pending_df(cat)
+        .join(seen, "canon_url", "left_anti")
+        .orderBy("canon_url")
+        .limit(3)
+        .collect()
+    ]
+    fresh = [f"https://{tag}.example/img/img_{i:012d}" for i in range(4)]
+    return crawled + enqueued + fresh + ["ftp://nope.example/x", fresh[0]]
+
+
+def test_add_seeds_outgrown_bloom_rebuilds_once(spark, world, tmp_path_factory, monkeypatch):
+    """A stored bloom row with n_added > capacity takes the doubling
+    rebuild: exactly one O(pool) build, capacity stored as twice the pool,
+    dispositions still exact — and the next ingest is delta-only again."""
+    from visiblev8_crawler_spark.operators import bloom as bloom_mod
+
+    cat, robots = _short_campaign(spark, world, str(tmp_path_factory.mktemp("cat_grow")))
+    first = [f"https://grow-a.example/img/img_{i:012d}" for i in range(3)]
+    assert scheduler.add_seeds(spark, cat, _mk_frontier(spark, first), robots)["added"] == 3
+
+    # pretend the stored filter outgrew its sizing (same bits, shrunk capacity)
+    bf, _, n_added = B.bloom_from_rows(cat.read("bloom").collect())
+    cat.commit(
+        None,
+        replaces={
+            "bloom": spark.createDataFrame(
+                B.bloom_to_rows(bf, n_added - 1, n_added), scheduler.TABLE_SCHEMAS["bloom"]
+            )
+        },
+    )
+
+    builds = []
+    orig = bloom_mod.build_bloom
+
+    def counting(*a, **k):
+        builds.append(a[2] if len(a) > 2 else k["capacity"])
+        return orig(*a, **k)
+
+    monkeypatch.setattr(bloom_mod, "build_bloom", counting)
+    n_pool = scheduler.pool_df(cat).count()
+    counts = scheduler.add_seeds(
+        spark, cat, _mk_frontier(spark, _ingest_batch(cat, "grow-b")), robots
+    )
+    assert counts == {"added": 4, "cached": 3, "enqueued": 3, "invalid": 1, "duplicate": 1}
+    assert builds == [2 * n_pool], "one rebuild, sized at twice the pool"
+    _, capacity, n_after = B.bloom_from_rows(cat.read("bloom").collect())
+    assert capacity == 2 * n_pool
+    assert n_after == n_pool + 4 == scheduler.pool_df(cat).count()
+
+    counts = scheduler.add_seeds(spark, cat, _mk_frontier(spark, first), robots)
+    assert counts == {"added": 0, "enqueued": 3}
+    assert len(builds) == 1, "fits again: no second rebuild"
+
+
+def test_add_seeds_all_maybe_bloom_same_dispositions(spark, world, tmp_path_factory, monkeypatch):
+    """Force the probe to say "maybe" for every row (a saturated bitmap, so
+    every candidate takes the exact-confirm join): the per-row dispositions
+    must equal the unforced run's on an identical catalog."""
+    from visiblev8_crawler_spark.operators import bloom as bloom_mod
+
+    def ingest(tag):
+        cat, robots = _short_campaign(spark, world, str(tmp_path_factory.mktemp(tag)))
+        batch = _ingest_batch(cat, "maybe")
+        base = cat.read("frontier_prepared").agg(F.max("seq")).collect()[0][0] + 1
+        counts = scheduler.add_seeds(spark, cat, _mk_frontier(spark, batch), robots)
+        rows = {
+            (r["canon_url"], r["reason"])
+            for r in cat.read("frontier_prepared").filter(F.col("seq") >= base).collect()
+        }
+        return counts, rows
+
+    plain = ingest("cat_plain")
+    orig = bloom_mod.build_bloom
+
+    def saturated(*a, **k):
+        bf = orig(*a, **k)
+        return B.BloomFilter(bf.n_bits, bf.n_hashes, np.full_like(bf.bits, 0xFF))
+
+    monkeypatch.setattr(bloom_mod, "build_bloom", saturated)
+    forced = ingest("cat_forced")
+    assert forced == plain
+    assert plain[0] == {"added": 4, "cached": 3, "enqueued": 3, "invalid": 1, "duplicate": 1}

@@ -294,57 +294,6 @@ def test_campaign_disk_stays_bounded_with_expiry(spark, world, tmp_path_factory)
     assert len(cat.snapshots()) <= 4
 
 
-def test_read_since_incremental_scan(spark, tmp_path_factory):
-    """read_since(seq) reads exactly the file sets committed after the
-    cursor snapshot — the poll shape for downstream consumers (C10
-    incremental ingest analog): three commits, cursor after the first,
-    delta contains only the later two; a fresh cursor yields empty."""
-    root = str(tmp_path_factory.mktemp("cat_inc"))
-    cat = ParquetCatalog(spark, root, {"t": T})
-    cat.commit("w0", appends={"t": spark.createDataFrame([("a", 1)], T)})
-    cursor = cat.commit_seq()
-    cat.commit("w1", appends={"t": spark.createDataFrame([("b", 2)], T)})
-    cat.commit("w2", appends={"t": spark.createDataFrame([("c", 3)], T)})
-
-    delta = {(r["k"], r["v"]) for r in cat.read_since("t", cursor).collect()}
-    assert delta == {("b", 2), ("c", 3)}
-    assert cat.read_since("t", cat.commit_seq()).count() == 0
-    # seq=0 (pre-history cursor) -> everything
-    assert {(r["k"], r["v"]) for r in cat.read_since("t", 0).collect()} == {
-        ("a", 1), ("b", 2), ("c", 3),
-    }
-
-
-def test_read_since_raises_across_compaction_epoch(spark, tmp_path_factory):
-    """An incremental cursor taken before a compaction must NOT silently
-    re-read the whole table (the rewritten set holds all rows): read_since
-    raises RebaselineRequired, and a fresh full-read + new cursor resumes
-    exactly-once polling — the resend-loop analog driven across a compaction
-    without double-processing."""
-    import pytest
-
-    from visiblev8_crawler_spark.catalog import RebaselineRequired
-
-    root = str(tmp_path_factory.mktemp("cat_epoch"))
-    cat = ParquetCatalog(spark, root, {"t": T})
-    cat.commit("w0", appends={"t": spark.createDataFrame([("a", 1)], T)})
-    cursor = cat.commit_seq()
-    cat.commit("w1", appends={"t": spark.createDataFrame([("b", 2)], T)})
-    assert cat.replace_epoch("t") == 0
-    assert cat.compact("t", min_file_sets=2)
-    assert cat.replace_epoch("t") == 1
-
-    with pytest.raises(RebaselineRequired, match="re-baseline|Re-baseline"):
-        cat.read_since("t", cursor)
-
-    # the documented recovery: full read once, poll from a fresh cursor
-    assert _rows(cat) == {("a", 1), ("b", 2)}
-    cursor = cat.commit_seq()
-    cat.commit("w2", appends={"t": spark.createDataFrame([("c", 3)], T)})
-    delta = {(r["k"], r["v"]) for r in cat.read_since("t", cursor).collect()}
-    assert delta == {("c", 3)}, "post-rebaseline polling must be delta-only again"
-
-
 def test_compact_retries_past_concurrent_append(spark, tmp_path_factory):
     """A lock-free appender landing between compact()'s snapshot and its
     manifest swap aborts the rewrite (expect_replaced); compact must

@@ -7,9 +7,10 @@ contracts directly, independent of the end-to-end replicas:
 - _np_fold_dot / _np_fold_norms reproduce DuckDB's list_dot_product /
   sqrt on the real fixture vectors bit-for-bit (same sequential fold
   order, IEEE-correctly-rounded ops);
-- the MIH popcount kernel's byte-LUT popcount is exact two's-complement
+- the MIH kernel's in-place SWAR popcount is exact two's-complement
   popcount for signed int64 (including negative XOR results);
-- phash64_batch equals an independently-spelled scalar reference.
+- phash64_batch equals an independently-spelled scalar reference;
+- the numpy band-signature sign rule equals Spark's on NaN and ±0.0.
 """
 
 import numpy as np
@@ -87,14 +88,21 @@ def test_bucket_topk_slack_is_safe_vs_bruteforce(emb_pdf):
 
 
 def test_popcount_lut_twos_complement():
-    from visiblev8_crawler_spark.plans.imageops import _np_popcount64
+    """The MIH kernel's in-place SWAR popcount over int64 XORs viewed as
+    uint64: two's-complement bit counts, negative XORs included."""
+    from visiblev8_crawler_spark.plans.imageops import _popcount64_inplace
 
     rng = np.random.default_rng(7)
-    xs = rng.integers(-(2**63), 2**63 - 1, size=2000, dtype=np.int64)
-    xs = np.concatenate([xs, np.array([0, -1, 2**63 - 1, -(2**63)], dtype=np.int64)])
-    got = _np_popcount64(xs)
+    a = rng.integers(-(2**63), 2**63 - 1, size=2000, dtype=np.int64)
+    b = rng.integers(-(2**63), 2**63 - 1, size=2000, dtype=np.int64)
+    xs = np.concatenate(
+        [a ^ b, np.array([0, -1, 2**63 - 1, -(2**63), -2], dtype=np.int64)]
+    )
+    assert (xs < 0).any()
     want = [bin(int(x) & (2**64 - 1)).count("1") for x in xs]
-    assert got.tolist() == want
+    u = xs.copy().view(np.uint64)
+    _popcount64_inplace(u, np.empty_like(u))
+    assert u.tolist() == want
 
 
 def test_phash_batch_matches_scalar_reference():
@@ -220,3 +228,32 @@ def test_lsh_kernel_chunking_invariant():
     # chunking splits query rows, never the candidate axis, so the per-row
     # threshold (and thus the keep-set) is exactly chunk-invariant
     assert key(topk_full) == key(topk_chunked)
+
+
+def test_band_sig_sign_rule_matches_spark_on_nan(spark):
+    """_np_band_sigs vs _sig_expr_spark row for row: Spark orders NaN above
+    every double (NaN > 0 is true), -0.0 > 0 and 0.0 > 0 are false."""
+    from pyspark.sql import functions as F
+
+    from visiblev8_crawler_spark.plans import annops as a
+
+    axes = a._band_axes(8, 6)
+    rng = np.random.default_rng(11)
+    special = np.array([np.nan, 0.0, -0.0, 1.5, -1.5, 1e-300, -1e-300])
+    X = rng.choice(special, size=(40, a._DIM))
+    X[0, :] = np.nan
+    X[1, :] = -0.0
+    X[2, :] = 0.0
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    )
+    got = df.select(
+        "vec_id",
+        *[a._sig_expr_spark(F.col("embedding"), ax).alias(f"b{i}") for i, ax in enumerate(axes)],
+    ).orderBy("vec_id").collect()
+    spark_sigs = np.array([[r[f"b{i}"] for i in range(len(axes))] for r in got]).T
+    np_sigs = a._np_band_sigs(X, axes)
+    assert np_sigs.tolist() == spark_sigs.tolist()
+    assert np_sigs[:, 0].tolist() == [2**6 - 1] * 8  # all-NaN row: every bit set
+    assert not np_sigs[:, 1].any() and not np_sigs[:, 2].any()

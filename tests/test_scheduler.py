@@ -447,19 +447,20 @@ def test_failed_stats_scan_fails_campaign_cleanly(
 
 def test_incremental_fetch_poll_via_snapshots(spark_run):
     """C10 poll shape at ledger scale: a downstream consumer polls the
-    fetch ledger with read_since(cursor) and sees exactly the waves
-    committed after its cursor — no full-table re-read per poll cycle
-    (the reference's resend_script_ids.py:59-99 loop re-reads everything).
+    fetch ledger with poll(cursor) and sees exactly the waves committed
+    after its cursor — no full-table re-read per poll cycle (the
+    reference's resend_script_ids.py:59-99 loop re-reads everything).
     Cursor = the snapshot whose watermark is wave 1."""
     cat = spark_run
     cursor = next(
         s for s in cat.snapshots() if cat._load_snapshot(s)["watermark"] == 1
     )
-    delta = {
-        (r["canon_url"], r["wave_id"]) for r in cat.read_since("fetches", cursor).collect()
-    }
+    delta_df, next_cursor, rebaselined = cat.poll("fetches", cursor)
+    assert not rebaselined and next_cursor == cat.commit_seq()
+    delta = {(r["canon_url"], r["wave_id"]) for r in delta_df.collect()}
     full = {
         (r["canon_url"], r["wave_id"]) for r in cat.read("fetches").collect()
     }
     assert delta == {(u, w) for (u, w) in full if w > 1}
-    assert cat.read_since("fetches", cat.commit_seq()).count() == 0
+    empty, _, rebaselined = cat.poll("fetches", next_cursor)
+    assert not rebaselined and empty.count() == 0

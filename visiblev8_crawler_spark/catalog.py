@@ -38,16 +38,6 @@ class ConcurrentReplaceError(RuntimeError):
     catalog is untouched; re-snapshot and retry."""
 
 
-class RebaselineRequired(RuntimeError):
-    """An incremental ``read_since`` cursor straddles a replace (compaction)
-    epoch: the path diff since the cursor no longer means "new rows only" —
-    it contains a rewritten set holding ALL rows. The caller must
-    re-baseline: full ``read()`` once, then resume polling from a fresh
-    ``commit_seq()`` cursor. Raised instead of silently double-reading
-    (the at-least-once hazard of the reference's resend poll loop,
-    resend_script_ids.py:59-99, made loud)."""
-
-
 class ParquetCatalog:
     MANIFEST = "_manifest.json"
 
@@ -78,12 +68,6 @@ class ParquetCatalog:
         m.setdefault("meta", {})
         m.setdefault("epochs", {})
         return m
-
-    def replace_epoch(self, name: str) -> int:
-        """How many times this table has been REPLACED (compaction / fold).
-        Incremental consumers pair this with ``commit_seq()``: a cursor is
-        only valid within one epoch — ``read_since`` enforces it."""
-        return self._load_manifest()["epochs"].get(name, 0)
 
     def meta(self, key: str, default=None):
         """Small scalar state stored in the manifest itself (e.g. the bloom
@@ -135,7 +119,7 @@ class ParquetCatalog:
                 expected = self._load_manifest()["tables"].get(name, [])
                 if len(expected) < min_file_sets:
                     return False
-                snapshot = self.spark.read.schema(self.schemas[name]).parquet(*expected)
+                snapshot = self._scan(name, expected)
                 # tag=None: derived from the monotonic commit counter INSIDE
                 # the commit lock — never reuses a tag, so it can never
                 # overwrite the very path the lazy snapshot DataFrame is
@@ -152,11 +136,13 @@ class ParquetCatalog:
         return True
 
     # -- reads -------------------------------------------------------------
-    def read(self, name: str) -> DataFrame:
-        paths = self._load_manifest()["tables"].get(name, [])
+    def _scan(self, name: str, paths: list[str]) -> DataFrame:
         if not paths:
             return self.spark.createDataFrame([], self.schemas[name])
         return self.spark.read.schema(self.schemas[name]).parquet(*paths)
+
+    def read(self, name: str) -> DataFrame:
+        return self._scan(name, self._load_manifest()["tables"].get(name, []))
 
     # -- snapshot history (Iceberg time travel / expire analog) ------------
     def _snapdir(self) -> str:
@@ -188,54 +174,12 @@ class ParquetCatalog:
         never deleted by commits or compaction, only by expiry, so an old
         snapshot's paths remain readable (e.g. diff the url_seen set
         between two waves, or audit what a compaction folded)."""
-        paths = self._load_snapshot(seq)["tables"].get(name, [])
-        if not paths:
-            return self.spark.createDataFrame([], self.schemas[name])
-        return self.spark.read.schema(self.schemas[name]).parquet(*paths)
-
-    def read_since(self, name: str, seq: int) -> DataFrame:
-        """Incremental scan (Iceberg incremental-append-scan analog): only
-        the file sets committed AFTER snapshot ``seq`` — the efficient
-        poll shape for downstream consumers (the reference's
-        resend_script_ids.py:59-99 poll loop re-reads everything each
-        cycle; a 10^10-row campaign's poller must read only the delta).
-        Correct for append-only history ONLY: if a replace (compaction /
-        fold) landed after ``seq``, the path diff contains the rewritten
-        set — ALL rows, old ones included — so this raises
-        ``RebaselineRequired`` instead of silently double-reading; the
-        caller does one full ``read()`` and resumes from a fresh
-        ``commit_seq()`` cursor. Pair with ``commit_seq()`` as the cursor.
-
-        Reader-side expiry hazard (same as ``read_at``): the returned
-        DataFrame is lazy; a concurrent ``expire_snapshots`` in another
-        process can delete its files mid-scan. Pass an age floor
-        (``expire_snapshots(min_age_s=...)``) sized to the longest
-        expected poll-to-consume lag."""
-        m = self._load_manifest()
-        if seq:
-            snap = self._load_snapshot(seq)
-            then_epoch = snap.get("epochs", {}).get(name, 0)
-            now_epoch = m["epochs"].get(name, 0)
-            if then_epoch != now_epoch:
-                raise RebaselineRequired(
-                    f"read_since({name!r}, seq={seq}) crosses a replace "
-                    f"epoch ({then_epoch} -> {now_epoch}): the delta since "
-                    "the cursor contains a compacted rewrite of the whole "
-                    "table, not just new rows. Re-baseline: read() the full "
-                    "table once and poll from a fresh commit_seq() cursor."
-                )
-            since = set(snap["tables"].get(name, []))
-        else:
-            since = set()
-        now = m["tables"].get(name, [])
-        new = [p for p in now if p not in since]
-        if not new:
-            return self.spark.createDataFrame([], self.schemas[name])
-        return self.spark.read.schema(self.schemas[name]).parquet(*new)
+        return self._scan(name, self._load_snapshot(seq)["tables"].get(name, []))
 
     def poll(self, name: str, cursor: int | None) -> tuple[DataFrame, int, bool]:
-        """One step of an incremental consumer loop (the sharpened
-        ``read_since``): returns ``(delta_df, next_cursor, rebaselined)``.
+        """One step of an incremental consumer loop (Iceberg
+        incremental-append-scan analog): returns
+        ``(delta_df, next_cursor, rebaselined)``.
 
         - First call (``cursor`` falsy): full table, ``rebaselined=False``.
         - Steady state: exactly the file sets committed in
@@ -244,9 +188,14 @@ class ParquetCatalog:
           after ``next_cursor`` and shows up in the next poll).
         - Across a replace epoch (compaction/fold): ``rebaselined=True``
           and the delta is the FULL table as of ``next_cursor`` — the
-          consumer must dedupe by key or restart its derived state; the
-          flag is the loud version of ``read_since``'s raise for callers
-          that drive the loop through this API.
+          consumer must dedupe by key or restart its derived state.
+        - An expired cursor snapshot also rebaselines.
+
+        Reader-side expiry hazard (same as ``read_at``): the returned
+        DataFrame is lazy; a concurrent ``expire_snapshots`` in another
+        process can delete its files mid-scan. Pass an age floor
+        (``expire_snapshots(min_age_s=...)``) sized to the longest
+        expected poll-to-consume lag.
 
         Loop shape (the reference's resend poll, resend_script_ids.py:59-99,
         driven exactly-once)::
@@ -259,7 +208,7 @@ class ParquetCatalog:
         """
         next_cursor = self.commit_seq()
         if not next_cursor:
-            return self.spark.createDataFrame([], self.schemas[name]), 0, False
+            return self._scan(name, []), 0, False
         now = self._load_snapshot(next_cursor)
         now_paths = now["tables"].get(name, [])
         if not cursor:
@@ -282,10 +231,7 @@ class ParquetCatalog:
                 since = set(then["tables"].get(name, []))
                 rebaselined = False
                 new = [p for p in now_paths if p not in since]
-        if not new:
-            return self.spark.createDataFrame([], self.schemas[name]), next_cursor, rebaselined
-        df = self.spark.read.schema(self.schemas[name]).parquet(*new)
-        return df, next_cursor, rebaselined
+        return self._scan(name, new), next_cursor, rebaselined
 
     def expire_snapshots(self, keep_last: int = 64, min_age_s: float = 0.0) -> dict:
         """Drop all but the newest ``keep_last`` snapshots and DELETE every
@@ -300,7 +246,7 @@ class ParquetCatalog:
         in no snapshot at all, so concurrent wave writes are never touched.
 
         There is NO reader lease: a lazy DataFrame another process obtained
-        from ``read_at``/``read_since`` can still be mid-scan when its files
+        from ``read_at``/``poll`` can still be mid-scan when its files
         are deleted. ``min_age_s`` is the cheap lease approximation (Iceberg
         expiry-grace analog): snapshots committed within the last
         ``min_age_s`` seconds are never expired, so any reader that
@@ -352,8 +298,8 @@ class ParquetCatalog:
     def writer_lock(self):
         """Exclusive inter-process lock for multi-step read-modify-write
         transactions whose state spans MORE than one commit-critical
-        section — e.g. the seed ingest's bloom delta (read shards, OR in the
-        batch, publish), where two concurrent ingests would each read the
+        section — e.g. the seed ingest's bloom delta (read the bitmap, OR in
+        the batch, publish), where two concurrent ingests would each read the
         same base bitmap and the second commit would silently drop the
         first's delta. Distinct lock file from the commit flock: a holder
         still commits normally (same-process flock on the commit file would
@@ -476,8 +422,8 @@ class ParquetCatalog:
             for name, df in (replaces or {}).items():
                 p = self._write(name, df, tag)
                 m["tables"][name] = [p]
-                # replace-epoch bump: invalidates every read_since cursor
-                # taken before this commit (see RebaselineRequired)
+                # replace-epoch bump: a poll cursor taken before this
+                # commit rebaselines instead of reading the rewrite as new
                 m["epochs"][name] = m["epochs"].get(name, 0) + 1
             if watermark is not None:
                 m["watermark"] = watermark

@@ -16,8 +16,9 @@ MATCHED THEN INSERT``. Over the parquet-manifest catalog shim that is:
 Idempotent: replaying the same batch inserts nothing (every key already
 matched), which is what makes it safe under at-least-once delivery — the
 same property add_seeds relies on for the frontier. At scale, step 2 is
-where a bloom pre-filter slots in (operators/bloom.seen_anti_join) when the
-committed side outgrows a broadcast.
+where a bloom pre-filter slots in — the screen-then-exact-confirm shape
+add_seeds runs with operators/bloom.py — when the committed side outgrows a
+broadcast.
 """
 
 from __future__ import annotations

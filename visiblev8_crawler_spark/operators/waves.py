@@ -220,11 +220,8 @@ def next_eligible_wave(
     hosts = join_politeness_dims(
         pending.select("host").distinct(), robots, host_state
     ).filter(F.coalesce(F.col("max_per_wave"), F.lit(default_budget)) >= 1)
-    delay = F.when(
-        F.col("crawl_delay_s").isNull() | (F.col("crawl_delay_s") <= 0),
-        F.lit(DEFAULT_CRAWL_DELAY_S),
-    ).otherwise(F.col("crawl_delay_s"))
-    rate = F.lit(float(wave_period_s)) / delay
+    # rate depends on neither the wave id nor the budget
+    rate = politeness_exprs(0, default_budget, wave_period_s)["rate"]
     credit = F.coalesce(F.col("credit"), F.lit(0.0))
     last = F.coalesce(F.col("last_wave"), F.lit(-1))
     nxt = hosts.agg(

@@ -380,6 +380,21 @@ def _sig_expr_spark(col: Column, axes: list[int]) -> Column:
     return s
 
 
+def _np_band_sigs(X, axes: list[list[int]]):
+    """(bands, rows) int64 band signatures of the rows of ``X`` — the numpy
+    twin of _sig_expr_spark, one band per entry of ``axes``. Spark orders
+    NaN above every double, so ``NaN > 0`` is true there; numpy's is false,
+    hence the explicit isnan."""
+    import numpy as np
+
+    sigs = np.zeros((len(axes), X.shape[0]), dtype=np.int64)
+    for b_i, ax in enumerate(axes):
+        for j, a_ in enumerate(ax):
+            col = X[:, a_ - 1]
+            sigs[b_i] += np.where((col > 0) | np.isnan(col), 2**j, 0)
+    return sigs
+
+
 def _sig_sql(v: str, axes: list[int]) -> str:
     return " + ".join(
         f"(CASE WHEN {v}[{ax}] > 0 THEN {2**j} ELSE 0 END)" for j, ax in enumerate(axes)
@@ -692,11 +707,11 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
     # a broadcast delta bucket index, and the whole op collapses to one
     # map-only corpus scan: zero joins, zero pair-level exchanges, the
     # only exchange in the plan is the conditional fanout round-robin.
-    # Signature parity: the in-kernel sig is the same exact `v[axis] > 0`
-    # comparison _sig_expr_spark evaluates (no float arithmetic), and
-    # cosines use the same sequential fold — bit-identical output, pinned
-    # by the oracle replica + full-recompute equivalence + planted-delta
-    # gates.
+    # Signature parity: the in-kernel sig (_np_band_sigs) is the same exact
+    # `v[axis] > 0` comparison _sig_expr_spark evaluates, NaN included (no
+    # float arithmetic), and cosines use the same sequential fold —
+    # bit-identical output, pinned by the oracle replica + full-recompute
+    # equivalence + planted-delta gates.
     import numpy as np
     import pandas as pd
 
@@ -720,10 +735,7 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
     # delta bucket index: (band, sig) -> delta row positions, sig bits by
     # the exact _sig_expr_spark sign rule
     dbuckets: dict = {}
-    for b_i, ax in enumerate(axes):
-        sigs = np.zeros(len(d_ids), dtype=np.int64)
-        for j, a_ in enumerate(ax):
-            sigs += np.where(D[:, a_ - 1] > 0, 2 ** j, 0)
+    for b_i, sigs in enumerate(_np_band_sigs(D, axes)):
         for s_val in np.unique(sigs):
             dbuckets[(b_i, int(s_val))] = np.flatnonzero(sigs == s_val)
     bdelta = spark.sparkContext.broadcast(
@@ -743,10 +755,7 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
             )
             va = b["vec_id"].to_numpy(dtype=np.int64)
             # batch band signatures, same sign rule as the delta index
-            bsigs = np.zeros((bands, nrows), dtype=np.int64)
-            for b_i, ax in enumerate(axes):
-                for j, a_ in enumerate(ax):
-                    bsigs[b_i] += np.where(A[:, a_ - 1] > 0, 2 ** j, 0)
+            bsigs = _np_band_sigs(A, axes)
             # per-row candidate set: union of the row's delta buckets
             # (np.unique subsumes the old cross-band collect_set); for
             # delta rows only strictly-newer partners (vec_b = max side)

@@ -576,26 +576,26 @@ def _probe_masks(bits: int, radius: int = 2) -> list[int]:
 # module-level so the cross-path equality gate can force either branch
 _MIH_KERNEL_MIN_OCC = 4
 
-_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
 
-
-def _np_popcount64(x: np.ndarray) -> np.ndarray:
-    """Two's-complement popcount of an int64 array (exact). Deliberately
-    NOT np.bitwise_count of the signed value, which counts bits of |x|
-    and would be wrong for negative XOR results. Without the numpy-2
-    ufunc, a SWAR nibble reduction (the classic Hamming-weight bit
-    trick; exact for every 64-bit pattern, pinned against the byte LUT
-    by test_popcount_twos_complement) — measured 4.5x the byte-LUT
-    gather this repo used first."""
-    if hasattr(np, "bitwise_count"):
-        return np.bitwise_count(np.ascontiguousarray(x).view(np.uint64)).astype(
-            np.int64
-        )
-    u = np.ascontiguousarray(x).view(np.uint64).copy()
-    u -= (u >> 1) & 0x5555555555555555
-    u = (u & 0x3333333333333333) + ((u >> 2) & 0x3333333333333333)
-    u = (u + (u >> 4)) & 0x0F0F0F0F0F0F0F0F
-    return ((u * 0x0101010101010101) >> 56).astype(np.int64)
+def _popcount64_inplace(u: np.ndarray, t: np.ndarray) -> None:
+    """Replace each uint64 in ``u`` by its popcount, using ``t`` (same
+    length, uint64) as scratch. SWAR nibble reduction (the classic
+    Hamming-weight bit trick), exact for every 64-bit pattern, so a
+    negative int64 XOR viewed as uint64 counts its two's-complement bits.
+    In place because the kernel's hot loop is memory-bound: no temporaries
+    beyond the caller's pinned buffers."""
+    np.right_shift(u, 1, out=t)
+    t &= 0x5555555555555555
+    u -= t
+    np.right_shift(u, 2, out=t)
+    t &= 0x3333333333333333
+    u &= 0x3333333333333333
+    u += t
+    np.right_shift(u, 4, out=t)
+    u += t
+    u &= 0x0F0F0F0F0F0F0F0F
+    u *= 0x0101010101010101
+    np.right_shift(u, 56, out=u)
 
 
 # bounds the flattened per-slice candidate arrays; read on the driver and
@@ -755,19 +755,8 @@ def _mih_rendezvous_kernel(
         np.take(ph, i, out=vxa)
         np.take(ph, j, out=vxb)
         np.bitwise_xor(vxa, vxb, out=vxa)
-        u, t = vxa.view(np.uint64), tb[:total]
-        np.right_shift(u, 1, out=t)
-        t &= 0x5555555555555555
-        u -= t
-        np.right_shift(u, 2, out=t)
-        t &= 0x3333333333333333
-        u &= 0x3333333333333333
-        u += t
-        np.right_shift(u, 4, out=t)
-        u += t
-        u &= 0x0F0F0F0F0F0F0F0F
-        u *= 0x0101010101010101
-        np.right_shift(u, 56, out=u)
+        u = vxa.view(np.uint64)
+        _popcount64_inplace(u, tb[:total])
         # survivor-first: the tau filter keeps ~0.1%, so compress indices
         # before every other gather/compare
         kk = np.flatnonzero(u <= tau)

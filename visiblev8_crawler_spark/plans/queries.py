@@ -55,7 +55,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def fanout(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fanout(df: DataFrame) -> DataFrame:
     """Rebalance a parallelism-deficient scan before heavy per-row compute.
 
     The fixture parquet files are single-row-group, so every scan is ONE
@@ -69,7 +69,7 @@ def fanout(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     partitions, making this a no-op — only deficient scans pay the (tiny)
     exchange."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
     return df

@@ -423,7 +423,7 @@ def minhash_lsh_pairs(spark, sf_dir):
 
 
 # Incremental cursor: the top 20% of doc_ids stand in for "docs ingested
-# since the last snapshot" (in production the cursor is catalog.read_since's
+# since the last snapshot" (in production the cursor is a catalog.poll
 # snapshot id and the old-corpus band table is a stored index table, read
 # not recomputed). (max+1)*8//10 is exact integer math in BOTH engines —
 # floor(0.8*x) in binary floating point is off-by-one for some x.
@@ -459,7 +459,7 @@ _LSH_INCR_ORACLE_SQL = (
     None,  # pytest-oracled via _LSH_INCR_ORACLE_SQL + full-recompute
            # equivalence (rotation policy: newborn, driver window next round)
     "INCREMENTAL near-dup: index only the ingest delta (doc_id >= cursor, "
-    "standing in for a read_since snapshot cursor) against the existing "
+    "standing in for a catalog.poll snapshot cursor) against the existing "
     "corpus — the 100 TB path where re-minhashing the corpus per ingest "
     "batch is the thing you must never do. Delta docs are filtered BEFORE "
     "the shingle explode (delta-sized compute); the old-corpus band table "

@@ -194,9 +194,9 @@ METRICS_WINDOWS = StructType(
     ]
 )
 
-# persisted URL-seen bloom shards (operators/bloom.py): maintained
+# persisted URL-seen bloom bitmap (operators/bloom.py), one row: maintained
 # incrementally by add_seeds — delta OR per ingest, O(pool) rebuild only on
-# capacity doubling
+# capacity doubling. ``shard`` is always 0; it stays so older catalogs load.
 BLOOM_STATE = StructType(
     [
         StructField("shard", IntegerType()),

@@ -72,6 +72,10 @@ TABLE_SCHEMAS = {
     "bloom": schemas.BLOOM_STATE,
 }
 
+# add_seeds' seen-set filter: false-positive rate the bitmap is sized for
+# (~9.6 bits/key); a false positive only sends a row to the exact join
+BLOOM_FPP = 0.01
+
 
 def url_seen_df(cat: ParquetCatalog) -> DataFrame:
     """The URL-seen set (backend tasks.py:148-156 analog) — a projection of
@@ -164,16 +168,7 @@ def host_state_df(
             F.sum(F.when(F.col("status") == "OK", 1).otherwise(0)).alias("n_ok"),
         )
     )
-    dims = robots.select(
-        "host",
-        "max_per_wave",
-        *(
-            [F.col("crawl_delay_s")]
-            if "crawl_delay_s" in robots.columns
-            else [F.lit(None).cast("double").alias("crawl_delay_s")]
-        ),
-    )
-    joined = per_wave.join(F.broadcast(dims), "host", "left")
+    joined = per_wave.join(F.broadcast(robots_dim(robots)), "host", "left")
     wp, db = float(wave_period_s), int(default_budget)
     da, dfac = int(demote_after_failures), int(demote_factor)
 
@@ -210,7 +205,7 @@ def host_state_df(
 class _HostState:
     """In-run politeness state: {host: [credit, last_wave, ok, failed]}.
 
-    Driver-held, like the bloom shards (the north_rule's own "broadcast
+    Driver-held, like the bloom bitmap (the north_rule's own "broadcast
     bloom" pattern): per-host aggregate state is orders of magnitude
     smaller than the frontier (~50 B/host), and the selection plan consumes
     it as a broadcast dimension either way — holding the authoritative copy
@@ -440,7 +435,7 @@ def run_campaign(
         # politeness state resumes from the ledger too (empty ledger -> empty
         # state): the distributed fold replays exactly what the in-run
         # updates computed, and its per-host aggregate comes to the driver
-        # (bloom-shard pattern; see _HostState)
+        # (bloom-bitmap pattern; see _HostState)
         hstate = _HostState(
             host_state_df(
                 cat, robots, cfg.default_budget, cfg.wave_period_s,
@@ -632,17 +627,16 @@ def add_seeds(
     cat: ParquetCatalog,
     new_frontier: DataFrame,
     robots: DataFrame,
-    fpp: float = 0.01,
 ) -> dict:
     """Serialized entry point for seed ingest: the bloom maintenance inside
-    is a read-modify-write spanning the whole call (read shards → OR the
+    is a read-modify-write spanning the whole call (read the bitmap → OR the
     batch delta → publish), so concurrent ingests take the catalog's writer
     lock and run one at a time — the 'single ingest writer' assumption is
     now enforced, not documented. Wave-loop commits are unaffected (they
     never touch the bloom or this lock). See _add_seeds_impl for the full
     semantics."""
     with cat.writer_lock():
-        return _add_seeds_impl(spark, cat, new_frontier, robots, fpp)
+        return _add_seeds_impl(spark, cat, new_frontier, robots)
 
 
 def _add_seeds_impl(
@@ -650,7 +644,6 @@ def _add_seeds_impl(
     cat: ParquetCatalog,
     new_frontier: DataFrame,
     robots: DataFrame,
-    fpp: float = 0.01,
 ) -> dict:
     """Incremental seed ingest into a live/finished campaign — the rebuild of
     the reference's always-on submit path: new URLs arrive while a campaign
@@ -663,8 +656,8 @@ def _add_seeds_impl(
     broadcast Bloom filter (operators/bloom.py) screens the batch first —
     bloom-negative rows (the vast majority of genuinely new URLs) skip the
     join entirely; only bloom-positive rows take the exact join, so exactness
-    is preserved while the join's probe side shrinks to (dup_rate + fpp) of
-    the batch.
+    is preserved while the join's probe side shrinks to
+    (dup_rate + BLOOM_FPP) of the batch.
 
     New rows are re-sequenced after every seq already in the catalog, so one
     global crawl order (seq) stays total and deterministic across ingests.
@@ -673,9 +666,9 @@ def _add_seeds_impl(
     already-enqueued ones as 'enqueued', plus the usual invalid/duplicate/
     robots from preparation. Returns the per-disposition counts.
 
-    Bloom maintenance is INCREMENTAL: the bitmap shards live in the catalog
+    Bloom maintenance is INCREMENTAL: the bitmap lives in the catalog
     ('bloom' table), each ingest ORs in a delta built over just its own new
-    rows (O(batch)), and the updated shards publish in the same atomic
+    rows (O(batch)), and the updated bitmap publishes in the same atomic
     commit as the frontier append. A full O(pool) rebuild happens only when
     n_added outgrows the sized capacity (doubling ⇒ amortized O(1) per row)
     — never per ingest, which at 10^10 seen URLs is the difference between
@@ -686,7 +679,7 @@ def _add_seeds_impl(
     join's build side). At 10^10 that scan prunes via the join's runtime
     filters and, on Iceberg, bucket-pruned storage-partitioned reads; the
     bloom guarantees the fraction of rows that ever reach it is
-    (dup_rate + fpp) of the batch.
+    (dup_rate + BLOOM_FPP) of the batch.
     """
     from ..operators.bloom import (
         bloom_from_rows,
@@ -713,16 +706,13 @@ def _add_seeds_impl(
     state_rows = cat.read("bloom").collect() if cat.file_sets("bloom") else []
     if state_rows:
         bf, capacity, n_added = bloom_from_rows(state_rows)
-        if n_added > capacity:  # outgrown: the amortized doubling rebuild
-            n_added = pool_urls.count()
-            capacity = max(2 * n_added, 1024)
-            bf = build_bloom(pool_urls, "canon_url", capacity=capacity, fpp=fpp)
-    else:
-        # first ingest on this catalog: one-time build over the pool with 2x
-        # headroom so subsequent ingests stay delta-only
+    if not state_rows or n_added > capacity:
+        # first ingest on this catalog, or the stored filter outgrew its
+        # sizing: one O(pool) build with 2x headroom, so later ingests stay
+        # delta-only (doubling => amortized O(1) per row)
         n_added = pool_urls.count()
         capacity = max(2 * n_added, 1024)
-        bf = build_bloom(pool_urls, "canon_url", capacity=capacity, fpp=fpp)
+        bf = build_bloom(pool_urls, "canon_url", capacity, BLOOM_FPP)
     flagged = with_bloom_maybe(cand, bf).persist()
     clean = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspect = (
@@ -755,7 +745,7 @@ def _add_seeds_impl(
         },
     }
     # incremental bloom: OR a delta over just this batch's newly-pooled rows
-    # (O(batch)); the updated shards and the frontier append publish in ONE
+    # (O(batch)); the updated bitmap and the frontier append publish in ONE
     # atomic commit, so the bloom can never disagree with the pool
     new_pool_urls = ingested.filter(F.col("reason").isNull()).select("canon_url")
     bf = bloom_or_delta(bf, new_pool_urls)
