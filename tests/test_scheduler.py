@@ -395,20 +395,19 @@ def test_kill_resume_identical(spark, world, spark_run, tmp_path_factory):
     assert scheduler.pending_df(cat).count() == 0
 
 
-def test_failed_stats_scan_fails_campaign_cleanly(
+def test_failed_post_commit_read_fails_campaign_cleanly(
     spark, world, spark_run, tmp_path_factory, monkeypatch
 ):
-    """VERDICT r3 #8: the overlapped per-wave stats scan re-raises on join —
-    a failed scan (injected here into wave 1's background read) must fail
+    """VERDICT r3 #8: a failure in the post-commit state transition (here
+    injected into the single read of wave 1's committed parquet) must fail
     the campaign AFTER that wave's atomic commit but BEFORE any later wave
-    could run on stale politeness state. The catalog is left at a clean
-    watermark, and a plain resume (politeness state refolds from the
-    ledger) finishes byte-identical to the uninterrupted campaign."""
-    import threading
-
+    could run on stale pending or politeness state. The catalog is left at
+    a clean watermark, and a plain resume (pending and politeness state
+    re-derive from the ledger) finishes byte-identical to the
+    uninterrupted campaign."""
     import pyspark.sql.readwriter as rw
 
-    root = str(tmp_path_factory.mktemp("cat_statsfail"))
+    root = str(tmp_path_factory.mktemp("cat_postcommitfail"))
     frontier = spark.read.parquet(world["paths"]["frontier"])
     robots = spark.read.parquet(world["paths"]["robots"])
     images = spark.read.parquet(world["paths"]["images"])
@@ -417,17 +416,12 @@ def test_failed_stats_scan_fails_campaign_cleanly(
     orig = rw.DataFrameReader.parquet
 
     def bomb(self, *paths):
-        # only the BACKGROUND stats read of wave 1's parquet fails; the
-        # main thread's pending-update read of the same path is untouched
-        if (
-            threading.current_thread() is not threading.main_thread()
-            and any(p.startswith(root) and "wave=1" in p for p in paths)
-        ):
-            raise RuntimeError("injected stats scan failure")
+        if any(p.startswith(root) and "wave=1" in p for p in paths):
+            raise RuntimeError("injected post-commit read failure")
         return orig(self, *paths)
 
     monkeypatch.setattr(rw.DataFrameReader, "parquet", bomb)
-    with pytest.raises(RuntimeError, match="injected stats scan failure"):
+    with pytest.raises(RuntimeError, match="injected post-commit read failure"):
         scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
     monkeypatch.setattr(rw.DataFrameReader, "parquet", orig)
 

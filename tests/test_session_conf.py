@@ -52,10 +52,6 @@ def test_every_session_conf_set_is_allowlisted():
         # per-operator knob; set for the campaign's duration, restored in
         # its finally (test_run_campaign_restores_arrow_conf_on_error)
         ("streaming/scheduler.py", "arrow_key"),
-        # KNOWN ROADMAP CARRY-OVER: the connected-components loop narrows
-        # shuffle.partitions session-wide (restored in a finally); it is
-        # to be replaced by explicit .repartition(n) on the loop relations
-        ("plans/annops.py", "'spark.sql.shuffle.partitions'"),
     }
     found = _conf_set_calls()
     unlisted = found - ALLOWED

@@ -101,9 +101,9 @@ def politeness_exprs(
 
     This is THE authoritative politeness spec; simulator.simulate_campaign
     replays the identical arithmetic sequentially, and the scheduler's
-    per-wave state update consumes ``eff_credit`` from the same expressions,
-    so selection and state can never drift apart. All arithmetic is IEEE
-    double with the same operation order on both sides.
+    per-wave state update is its Python mirror (host_rate_cap + bucket_step
+    below), so selection and state can never drift apart. All arithmetic
+    is IEEE double with the same operation order on every side.
 
         rate    = wave_period / crawl_delay          (credits earned / wave)
         m_eff   = demoted ? max(1, m // factor) : m  (abuse demotion)
@@ -151,23 +151,33 @@ def robots_dim(robots: DataFrame) -> DataFrame:
     ))
 
 
-def join_politeness_dims(
-    df: DataFrame,
-    robots: DataFrame,
-    host_state: DataFrame | None,
-) -> DataFrame:
-    """LEFT-broadcast-join the robots and host-state dimensions onto ``df``
-    (host-keyed), producing exactly the columns politeness_exprs reads.
-    Two independent broadcast hash joins — never a robots ⋈ state pre-join,
-    which (being full-outer) cannot broadcast and would drag a SortMergeJoin
-    + two exchanges into every wave."""
-    out = df.join(F.broadcast(robots_dim(robots)), "host", "left")
-    if host_state is None:
-        for name, t in STATE_COLS:
-            out = out.withColumn(name, F.lit(None).cast(t))
-        return out
-    state = host_state.select("host", *[n for n, _ in STATE_COLS])
-    return out.join(F.broadcast(state), "host", "left")
+def host_rate_cap(
+    max_per_wave, crawl_delay_s, default_budget: int, wave_period_s: float
+) -> tuple[float, int]:
+    """The Python form of politeness_exprs' per-host constants: (refill
+    rate, concurrency cap m). Null or NaN inputs (an unknown host, or a
+    null that crossed into pandas) take the defaults, like the coalesces
+    above."""
+    if max_per_wave is None or max_per_wave != max_per_wave:
+        max_per_wave = default_budget
+    if crawl_delay_s is None or crawl_delay_s != crawl_delay_s or crawl_delay_s <= 0:
+        crawl_delay_s = DEFAULT_CRAWL_DELAY_S
+    return float(wave_period_s) / float(crawl_delay_s), int(max_per_wave)
+
+
+def bucket_step(
+    state, wave_id: int, n_sel: int, n_ok: int, rate: float, m: int,
+    demote_after_failures: int, demote_factor: int,
+) -> list:
+    """Fold one wave's (n_sel, n_ok) into a host's [credit, last_wave, ok,
+    failed] (an unseen host is (0.0, -1, 0, 0)): the Python mirror of
+    politeness_exprs, in the same IEEE-double operation order, so the
+    driver state, the ledger fold and selection stay in lockstep."""
+    credit, last, ok, failed = state
+    demoted = failed >= demote_after_failures and failed > ok
+    m_eff = max(1, m // demote_factor) if demoted else m
+    eff = min(credit + rate * (wave_id - last), float(max(m_eff, 1)))
+    return [eff - n_sel, wave_id, ok + n_ok, failed + (n_sel - n_ok)]
 
 
 def with_host_budget(
@@ -180,54 +190,27 @@ def with_host_budget(
     demote_after_failures: int = DEMOTE_AFTER_FAILURES,
     demote_factor: int = DEMOTE_FACTOR,
 ) -> DataFrame:
-    """Left-broadcast-join the per-host politeness dimension (robots ⋈
-    carried token-bucket state; one row per host) onto pending and
-    evaluate the token-bucket budget at ``wave_id``.
+    """Left-broadcast-join the robots and carried token-bucket state
+    dimensions onto pending (host-keyed) and evaluate the token-bucket
+    budget at ``wave_id``. Two independent broadcast hash joins — never a
+    robots ⋈ state pre-join, which (being full-outer) cannot broadcast and
+    would drag a SortMergeJoin + two exchanges into every wave.
     Unknown hosts get the default budget at the reference's global
     DELAY=1 s; hosts with no state yet start with an empty bucket that has
     accrued ``wave_id + 1`` waves of credit."""
     e = politeness_exprs(
         wave_id, default_budget, wave_period_s, demote_after_failures, demote_factor
     )
-    return (
-        join_politeness_dims(pending, robots, host_state)
-        .withColumn("host_budget", e["host_budget"])
-        .drop("max_per_wave", "crawl_delay_s", "credit", "last_wave", "ok", "failed")
+    out = pending.join(F.broadcast(robots_dim(robots)), "host", "left")
+    if host_state is None:
+        for name, t in STATE_COLS:
+            out = out.withColumn(name, F.lit(None).cast(t))
+    else:
+        state = host_state.select("host", *[n for n, _ in STATE_COLS])
+        out = out.join(F.broadcast(state), "host", "left")
+    return out.withColumn("host_budget", e["host_budget"]).drop(
+        "max_per_wave", "crawl_delay_s", "credit", "last_wave", "ok", "failed"
     )
-
-
-def next_eligible_wave(
-    pending: DataFrame,
-    robots: DataFrame,
-    host_state: DataFrame | None,
-    default_budget: int = DEFAULT_BUDGET,
-    wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
-) -> int | None:
-    """Fast-forward target for an empty wave: the earliest wave id at which
-    some pending host's bucket reaches 1 credit. Only called when selection
-    returned no rows while pending is non-empty — in that state every
-    pending host has eff < 1 (the bucket cap is always >= 1, so the cap
-    never blocks reaching 1 credit), hence
-        next_w(h) = last_wave + ceil((1 - credit) / rate)   (> current wave)
-    and the scheduler jumps straight there instead of burning one selection
-    pass per empty wave (a host declaring Crawl-delay: 3600 at a 60 s
-    period would otherwise cost 60 empty selection jobs per fetch).
-    Hosts whose concurrency cap is 0 (a robots row with max_per_wave=0)
-    can never fetch at any wave, so they are excluded from the minimum —
-    otherwise the scheduler would fast-forward one jump at a time until
-    max_waves. Returns None when pending has no rows or no pending host can
-    ever become eligible (the scheduler then stops instead of spinning)."""
-    hosts = join_politeness_dims(
-        pending.select("host").distinct(), robots, host_state
-    ).filter(F.coalesce(F.col("max_per_wave"), F.lit(default_budget)) >= 1)
-    # rate depends on neither the wave id nor the budget
-    rate = politeness_exprs(0, default_budget, wave_period_s)["rate"]
-    credit = F.coalesce(F.col("credit"), F.lit(0.0))
-    last = F.coalesce(F.col("last_wave"), F.lit(-1))
-    nxt = hosts.agg(
-        F.min(last + F.ceil((F.lit(1.0) - credit) / rate)).alias("w")
-    ).collect()[0]["w"]
-    return int(nxt) if nxt is not None else None
 
 
 def select_wave(

@@ -594,24 +594,6 @@ def _band_entries(emb: DataFrame, bands: int, r: int) -> DataFrame:
     )
 
 
-def _band_ids(emb: DataFrame, bands: int, r: int) -> DataFrame:
-    """(vec_id, band, sig) bucket entries — the id-only relation the
-    two-phase neardup plan shuffles (see _banded_neardup_spark)."""
-    axes = _band_axes(bands, r)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                _sig_expr_spark(F.col("embedding"), axes[i]).alias("sig"),
-            )
-            for i in range(bands)
-        ]
-    )
-    return emb.select("vec_id", F.explode(band_structs).alias("bs")).select(
-        "vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-
-
 def _banded_neardup_spark(spark, sf_dir, bands: int, r: int, tau: float) -> DataFrame:
     # Round-6 rewrite (guide §2.3 + §4.2; was the round-4 two-phase id-only
     # join): the bucket self-join materialized Σocc² candidate rows per band
@@ -983,16 +965,6 @@ def min_label_components(labels, edges, extra_rounds: int = 2, contract: bool = 
     comp_t = labels.schema["component"].dataType
     converged = n == 0  # empty edge set: nothing to propagate
     rounds = 0
-    # Size the loop's shuffles by the DATA, not the session default
-    # (optimization round 6, guide §2.2/§1.2): each round is a
-    # latency-bound micro-query over a few hundred KB of (id, label) rows,
-    # and 32 shuffle partitions x ~5 stages x 15 rounds drowned the work in
-    # task latency (measured at 190k edge rows: 13.5 s at 32 partitions,
-    # 6.8 s at 4). Scale-adaptive: partitions grow linearly with the active
-    # graph and cap at cluster parallelism, so a 10^9-edge graph still gets
-    # a full-width shuffle. Restored in finally — the surrounding query is
-    # unaffected.
-    sess = labels.sparkSession
     if contract and edges.count() >= _CONTRACT_MIN_EDGES:
         # one no-shuffle pass over the (checkpointed) edges; the star
         # list replaces the edge list for every loop round below.
@@ -1015,18 +987,9 @@ def min_label_components(labels, edges, extra_rounds: int = 2, contract: bool = 
         edges = _contract_edges(edges.coalesce(c_parts)).localCheckpoint(
             eager=True
         )
-    n_edges = edges.count()  # edges is checkpointed by every caller
-    loop_parts = max(2, min(
-        sess.sparkContext.defaultParallelism, (n + n_edges) // 50_000 + 1
-    ))
-    prev_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        labels, rounds, converged = _min_label_loop(
-            labels, edges, n, max_rounds, comp_t, converged
-        )
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    labels, rounds, converged = _min_label_loop(
+        labels, edges, n, max_rounds, comp_t, converged
+    )
     return (
         labels.select("vec_id", "component").unionByName(passive),
         rounds,
@@ -1054,21 +1017,41 @@ def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
       implies the fixpoint exactly (propagation is monotone: labels only
       decrease, and an unchanged window means no decrease anywhere); a
       converged graph may run up to _CC_UNROLL-1 extra no-op steps,
-      which cannot alter the labels."""
+      which cannot alter the labels.
+    - The loop's shuffles are sized by the DATA, not the session default
+      (optimization round 6, guide §2.2/§1.2): each round is a
+      latency-bound micro-query over a few hundred KB of (id, label) rows,
+      and 32 shuffle partitions x ~5 stages x 15 rounds drowned the work
+      in task latency (measured at 190k edge rows: 13.5 s at 32
+      partitions, 6.8 s at 4). Scale-adaptive: partitions grow linearly
+      with the active graph and cap at cluster parallelism, so a
+      10^9-edge graph still gets a full-width shuffle. The width rides
+      explicit repartitions on the loop relations, never a session-wide
+      shuffle.partitions change."""
     from pyspark.sql import Observation
 
     rounds = 0
+    sc = labels.sparkSession.sparkContext
+    # edges is checkpointed by every caller: a cheap local count
+    parts = max(2, min(sc.defaultParallelism, (n + edges.count()) // 50_000 + 1))
 
     def one_step(cur):
         round_edges = edges.unionByName(
             cur.select(F.col("component").alias("s"), F.col("vec_id").alias("t"))
         )
+        # the join's width comes from its label side: a (non-exchange)
+        # projection keyed at `parts` makes the planner shuffle the round
+        # edges to match. Repartitioning the edges instead would not hold:
+        # when both join inputs are exchanges the planner widens them to
+        # the session default. The planner drops the repartition when cur
+        # is already keyed (every fused step after an action's first).
         msgs = round_edges.join(
-            cur.withColumnRenamed("vec_id", "s"), "s"
+            cur.repartition(parts, "vec_id").withColumnRenamed("vec_id", "s"), "s"
         ).select(F.col("t").alias("vec_id"), "component")
         return (
             cur.select("vec_id", "component")
             .unionByName(msgs)
+            .repartition(parts, "vec_id")
             .groupBy("vec_id")
             .agg(F.min("component").alias("component"))
         )
@@ -1090,6 +1073,7 @@ def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
             .unionByName(
                 stepped.select("vec_id", "component").withColumn("old", null_old)
             )
+            .repartition(parts, "vec_id")
             .groupBy("vec_id")
             .agg(F.min("component").alias("component"), F.min("old").alias("old"))
             .observe(

@@ -165,8 +165,8 @@ def simulate_campaign(
                 leftover.append(item)
         if not selected:
             # every pending host's bucket is below 1 credit: fast-forward to
-            # the earliest wave where some host reaches 1 (waves.
-            # next_eligible_wave mirror) instead of spinning empty waves;
+            # the earliest wave where some host reaches 1 (scheduler.
+            # _HostState.next_wave mirror) instead of spinning empty waves;
             # zero-cap hosts (max_per_wave=0) can never fetch and are
             # excluded — if none remain, the campaign is done
             eligible = {

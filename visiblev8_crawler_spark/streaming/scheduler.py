@@ -19,8 +19,8 @@ State model (append-only, Iceberg-shaped):
                          lineage   = per-(wave, partition) rollup (lineage_df)
     pending            DERIVED, never written: pool ANTI url_seen ∪ retries.
                        During a run it lives as a localCheckpoint'd DataFrame
-                       updated per wave with a broadcast anti-join (selected
-                       wave ids are <= batch_size rows); on resume it is
+                       updated per wave with a broadcast anti-join (the
+                       committed wave's <= batch_size keys); on resume it is
                        re-derived from the committed tables. At 10^10-frontier
                        scale this is the difference between appending
                        ~batch_size rows per wave and rewriting the whole
@@ -42,6 +42,7 @@ depends on it.
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass
 
@@ -53,11 +54,11 @@ from ..catalog import ParquetCatalog
 from ..operators.dedup import prepare_frontier
 from ..operators.fetch import fetch_verify
 from ..operators.waves import (
-    DEFAULT_CRAWL_DELAY_S,
     DEMOTE_AFTER_FAILURES,
     DEMOTE_FACTOR,
+    bucket_step,
     choose_salt_width,
-    next_eligible_wave,
+    host_rate_cap,
     robots_dim,
     salt_col,
     select_wave,
@@ -130,14 +131,17 @@ def pending_df(cat: ParquetCatalog, salt_width: int = 8) -> DataFrame:
             "left_anti",
         )
     )
-    # retry-without-actions (reference parity: the retry crawls the direct
-    # URL with actions reset to None, vv8_worker/tasks.py:149-158)
-    retries = (
-        pool.join(retry_urls, "canon_url", "left_semi")
-        .withColumn("attempt", F.lit(2))
-        .withColumn("actions", F.lit(None).cast("string"))
-    )
+    retries = _as_retry(pool.join(retry_urls, "canon_url", "left_semi"))
     return schemas.conform(fresh.unionByName(retries), schemas.PENDING)
+
+
+def _as_retry(df: DataFrame) -> DataFrame:
+    """Pending rows as their second attempt: retry-without-actions
+    (reference parity: the retry crawls the direct URL with actions reset
+    to None, vv8_worker/tasks.py:149-158)."""
+    return df.withColumn("attempt", F.lit(2)).withColumn(
+        "actions", F.lit(None).cast("string")
+    )
 
 
 def host_state_df(
@@ -155,9 +159,9 @@ def host_state_df(
 
     The bucket recurrence (waves.politeness_exprs) is a sequential fold per
     host over its (wave_id, n_selected, n_ok) history, so the replay is a
-    grouped applyInPandas: one shuffle by host at resume time, with the
-    identical IEEE-double arithmetic the in-run incremental update performs —
-    the kill-resume equality test is what proves the two never diverge."""
+    grouped applyInPandas: one shuffle by host at resume time, folding with
+    the same waves.bucket_step the in-run update calls — the kill-resume
+    equality test is what proves the two never diverge."""
     import pandas as pd
 
     per_wave = (
@@ -174,29 +178,15 @@ def host_state_df(
 
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("wave_id")
-        m_raw = pdf["max_per_wave"].iloc[0]
-        m = db if pd.isna(m_raw) else int(m_raw)
-        d_raw = pdf["crawl_delay_s"].iloc[0]
-        d = DEFAULT_CRAWL_DELAY_S if (pd.isna(d_raw) or d_raw <= 0) else float(d_raw)
-        rate = wp / d
-        credit, last, ok, failed = 0.0, -1, 0, 0
+        rate, m = host_rate_cap(
+            pdf["max_per_wave"].iloc[0], pdf["crawl_delay_s"].iloc[0], db, wp
+        )
+        st = (0.0, -1, 0, 0)
         for w, n_sel, n_ok in zip(pdf["wave_id"], pdf["n_sel"], pdf["n_ok"]):
-            m_eff = max(1, m // dfac) if (failed >= da and failed > ok) else m
-            eff = min(credit + rate * (int(w) - last), float(max(m_eff, 1)))
-            credit = eff - int(n_sel)
-            last = int(w)
-            ok += int(n_ok)
-            failed += int(n_sel) - int(n_ok)
+            st = bucket_step(st, int(w), int(n_sel), int(n_ok), rate, m, da, dfac)
         return pd.DataFrame(
-            [
-                {
-                    "host": pdf["host"].iloc[0],
-                    "credit": credit,
-                    "last_wave": last,
-                    "ok": ok,
-                    "failed": failed,
-                }
-            ]
+            [[pdf["host"].iloc[0], *st]],
+            columns=["host", "credit", "last_wave", "ok", "failed"],
         )
 
     return joined.groupBy("host").applyInPandas(fold, schema=schemas.HOST_STATE)
@@ -211,13 +201,13 @@ class _HostState:
     it as a broadcast dimension either way — holding the authoritative copy
     on the driver removes one checkpoint action + one aggregation job per
     wave (measured 0.4 s/wave at local[8], the entire politeness overhead).
-    The update arithmetic below is the exact Python mirror of
-    waves.politeness_exprs / simulator.simulate_campaign, so selection,
-    state and the simulator stay in IEEE-double lockstep. Resume
-    re-derives the dict by folding the fetch ledger (host_state_df) —
-    state is a projection of fetches, never a committed table. The whole
-    host universe lives on the driver; only the hosts as_df() keeps ride
-    the per-wave broadcast.
+    update() and the ledger fold (host_state_df) both step the bucket with
+    waves.bucket_step, the Python mirror of waves.politeness_exprs, so
+    selection, state and the simulator stay in IEEE-double lockstep.
+    Resume re-derives the dict by that fold — state is a projection of
+    fetches, never a committed table. The whole host universe lives on the
+    driver; only the hosts as_df() keeps ride the per-wave broadcast, and
+    the empty-wave fast-forward (next_wave) reads the dict directly.
 
     Older catalogs may still list a ``host_state`` table and a
     storage-mode meta key from a since-removed table mode; run_campaign
@@ -270,33 +260,40 @@ class _HostState:
         return rate < float(max(m, 1))  # delay-bound: credit carries
 
     def _rate_m(self, host: str) -> tuple[float, int]:
-        m, d = self.dims.get(host, (None, None))
-        if m is None:
-            m = self.cfg.default_budget
-        if not d or d <= 0:
-            d = DEFAULT_CRAWL_DELAY_S
-        return self.cfg.wave_period_s / d, m
+        return host_rate_cap(
+            *self.dims.get(host, (None, None)),
+            self.cfg.default_budget, self.cfg.wave_period_s,
+        )
 
-    def update(self, wave_id: int, host_stats) -> None:
-        """Fold one wave's per-host (n_sel, n_ok) aggregate rows — produced
-        by a 2-column scan of the just-committed wave parquet that runs on
-        a background thread OVERLAPPED with the pending-update checkpoint,
-        so the stats cost ~zero wall time (an Observation collect_list on
-        the write measured ~0.3 s/wave at 22k rows; the overlapped scan
-        hides entirely behind the ~1 s checkpoint)."""
-        for r in host_stats:
-            host, n_sel, n_ok = r["host"], int(r["n_sel"]), int(r["n_ok"])
-            credit, last, ok, failed = self.state.get(host, (0.0, -1, 0, 0))
+    def update(self, wave_id: int, host_counts: dict) -> None:
+        """Fold one wave's {host: [n_sel, n_ok]}, counted on the driver from
+        the wave loop's single read of the just-committed wave parquet."""
+        for host, (n_sel, n_ok) in host_counts.items():
             rate, m = self._rate_m(host)
-            m_eff = (
-                max(1, m // self.cfg.demote_factor)
-                if (failed >= self.cfg.demote_after_failures and failed > ok)
-                else m
+            self.state[host] = bucket_step(
+                self.state.get(host, (0.0, -1, 0, 0)), wave_id, n_sel, n_ok,
+                rate, m, self.cfg.demote_after_failures, self.cfg.demote_factor,
             )
-            eff = min(credit + rate * (wave_id - last), float(max(m_eff, 1)))
-            self.state[host] = [
-                eff - n_sel, wave_id, ok + n_ok, failed + (n_sel - n_ok)
-            ]
+
+    def next_wave(self, hosts) -> int | None:
+        """Fast-forward target for an empty wave over the pending ``hosts``:
+        the earliest wave id at which one of their buckets reaches 1
+        credit. An empty selection with pending rows means every pending
+        host has eff < 1 (the bucket cap is >= 1, so it never blocks
+        reaching 1 credit), hence
+            next(h) = last_wave + ceil((1 - credit) / rate)
+        and the loop jumps there instead of running one selection pass per
+        empty wave (Crawl-delay 3600 at a 60 s period would cost 60 empty
+        passes per fetch). Hosts with cap 0 (robots max_per_wave=0) can
+        never fetch and are skipped; None when no host is left (pending
+        drained, or nothing can ever fetch) — the campaign is done."""
+        waves = []
+        for h in hosts:
+            rate, m = self._rate_m(h)
+            if m >= 1:
+                credit, last = self.state.get(h, (0.0, -1))[:2]
+                waves.append(last + math.ceil((1.0 - credit) / rate))
+        return min(waves, default=None)
 
 
 @dataclass
@@ -460,6 +457,8 @@ def _wave_loop(
     spark, cat, robots, images, cfg, stop_after_waves, pending, wave_id, salt_width,
     hstate,
 ):
+    import pandas as pd
+
     P = spark.sparkContext.defaultParallelism
     waves_done = 0
     carry_s = 0.0  # previous wave's commit+update time, folded into this wall
@@ -497,16 +496,14 @@ def _wave_loop(
         n_ok = int(obs.get["ok"] or 0)
         if n_attempted == 0:
             selected.unpersist()
-            # pending drained -> done; pending non-empty means every host's
-            # bucket is below 1 credit (Crawl-delay > wave period): jump to
-            # the earliest wave where one refills instead of spinning empty
-            # selection passes (simulator mirrors the same jump)
-            if pending.isEmpty():
-                break
-            nxt = next_eligible_wave(
-                pending, robots, state_df, cfg.default_budget, cfg.wave_period_s
+            # pending drained, or every pending host's bucket is below 1
+            # credit (Crawl-delay > wave period): jump to the earliest wave
+            # where one refills, or stop when none ever can (the simulator
+            # mirrors the same jump)
+            nxt = hstate.next_wave(
+                r["host"] for r in pending.select("host").distinct().collect()
             )
-            if nxt is None:  # no pending host can ever fetch (cap 0)
+            if nxt is None:
                 break
             wave_id = max(wave_id + 1, nxt)
             continue
@@ -536,68 +533,46 @@ def _wave_loop(
             watermark=wave_id,
         )
 
-        # per-host outcome aggregate for the politeness state — a 2-column
-        # columnar scan of the just-committed wave parquet, submitted on a
-        # background thread so it runs CONCURRENTLY with the pending-update
-        # checkpoint below and costs ~zero wall time (both read immutable
-        # committed data; Spark schedules jobs from separate threads fine)
-        import threading
-
-        stats_box: dict = {}
-
-        def _collect_stats(path=fetches_path, box=stats_box):
-            try:
-                box["rows"] = (
-                    spark.read.schema(schemas.FETCHES)
-                    .parquet(path)
-                    .groupBy("host")
-                    .agg(
-                        F.count("*").alias("n_sel"),
-                        F.sum(
-                            F.when(F.col("status") == "OK", 1).otherwise(0)
-                        ).alias("n_ok"),
-                    )
-                    .collect()
-                )
-            except BaseException as e:  # surfaced at join below
-                box["err"] = e
-
-        stats_thread = threading.Thread(target=_collect_stats, daemon=True)
-        stats_thread.start()
-
-        # incremental pending update (in-memory mirror of pending_df over the
-        # new snapshot): drop this wave's rows, add this wave's retryable
-        # failures back as attempt 2. Both joins broadcast the wave keys
-        # (<= batch_size rows); one localCheckpoint per wave materializes the
-        # new generation and truncates lineage. Retry keys are read back from
-        # the just-committed parquet — a columnar scan of <= batch_size rows,
-        # not a recompute of the fetch kernel.
-        wave_keys = F.broadcast(selected.select("canon_url"))
-        bad = (
+        # the post-commit state transition, from ONE read of the committed
+        # wave (<= batch_size rows): this wave's rows leave pending, its
+        # retryable first-attempt failures come back as attempt 2 (both
+        # joins broadcast one Arrow-built key relation), and the touched
+        # hosts' token buckets fold from per-host counts taken from the
+        # same rows. One localCheckpoint per wave materializes the new
+        # pending generation and truncates lineage.
+        rows = (
             spark.read.schema(schemas.FETCHES)
             .parquet(fetches_path)
-            .filter((F.col("attempt") == 1) & F.col("status").isin(*RETRYABLE))
-            .select("canon_url")
+            .select("canon_url", "host", "attempt", "status")
+            .collect()
         )
-        new_retries = schemas.conform(
-            selected.join(F.broadcast(bad), "canon_url", "left_semi")
-            .withColumn("attempt", F.lit(2))
-            # retry-without-actions (vv8_worker/tasks.py:149-158)
-            .withColumn("actions", F.lit(None).cast("string")),
-            schemas.PENDING,
+        keys = F.broadcast(
+            spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "canon_url": [r["canon_url"] for r in rows],
+                        "retry": [
+                            r["attempt"] == 1 and r["status"] in RETRYABLE
+                            for r in rows
+                        ],
+                    }
+                ),
+                "canon_url string, retry boolean",
+            )
         )
+        retries = _as_retry(selected.join(keys.filter("retry"), "canon_url", "left_semi"))
         pending = (
-            pending.join(wave_keys, "canon_url", "left_anti")
-            .unionByName(new_retries)
+            pending.join(keys, "canon_url", "left_anti")
+            .unionByName(schemas.conform(retries, schemas.PENDING))
             .coalesce(P)
             .localCheckpoint(eager=True)
         )
-        # politeness bucket + abuse record for the <= hosts-in-wave touched
-        # hosts — fed by the overlapped stats scan
-        stats_thread.join()
-        if "err" in stats_box:
-            raise stats_box["err"]
-        hstate.update(wave_id, stats_box["rows"])
+        host_counts: dict = {}
+        for r in rows:
+            c = host_counts.setdefault(r["host"], [0, 0])
+            c[0] += 1
+            c[1] += r["status"] == "OK"
+        hstate.update(wave_id, host_counts)
         selected.unpersist()
 
         # periodic maintenance: compaction is its own atomic commit after
